@@ -928,11 +928,8 @@ def kg_extract_text(spark, sf_dir):
 def kg_mentions(spark, sf_dir):
     """T2/T3(+T5): typed resolved-mention counts per coarse/fine type.
 
-    Uses the fused flat kernel (tag_flat — the pipeline's actual hot
-    path: one Arrow pass, flat pre-exploded rows) rather than the
-    nested tag_pages→explode variant, which pays a 5-10× costlier
-    ARRAY<STRUCT> pandas→Arrow boundary; the unfused path stays
-    covered by tests/test_operators.py + the fused-equivalence suite.
+    Uses the one per-document tagger (tag_flat: one Arrow pass, flat
+    pre-exploded rows), the same kernel both pipeline paths run.
     Mention rows here are post-nominal-resolution (T5), matching what
     linking/canonicalization actually consume."""
     from gaia_spark.operators.mentions import flat_mentions, tag_flat

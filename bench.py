@@ -84,7 +84,7 @@ def main() -> None:
     spark.range(1000).selectExpr("sum(id)").collect()
     from gaia_spark.operators.mentions import tag_flat
     warm = spark.read.parquet(os.path.join(cdir, "pages.parquet")).limit(256)
-    tag_flat(warm.repartition(2 * CPUS)).count()
+    tag_flat(warm.repartition(2 * CPUS), kinds="sa").count()
 
     qs = entrymod.queries()
     headline = [

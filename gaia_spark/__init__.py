@@ -11,18 +11,18 @@ Layout (SURVEY.md §2):
   session.py            tuned SparkSession factory
   catalog.py            checkpoint tables, replace-by-run_id, lineage
   operators/extract     T1  html→text (+ sentence index)
-  operators/mentions    T2/T3/T7 tagging (mapInPandas)
-  operators/coref       T5  nominal coref (applyInPandas)
+  operators/mentions    T2/T3/T5/T7 + per-doc T6/T8/T9: the one fused
+                        per-document tagger (tag_flat, mapInPandas)
   operators/linking     T4  broadcast alias join + MinHash/LSH NIL
-  operators/graph       J5  connected components (hash-min loop)
-  operators/relations   T6  adjacency self-join + pattern table
-  operators/events      T8/T9 trigger-argument attachment
+  operators/graph       J5  connected components and graph kernels
+  operators/event_coref T10 graph-based event coreference
   operators/canonicalize T11/T12 canonical ids + triple dedup
   operators/cleankb     T13 provenance semi-join + bounds
-  operators/dedup       corpus dedup family (exact/MinHash/SimHash/…)
-  operators/similarity  embedding ANN (brute-force + LSH-bucketed)
-  operators/textstats   lang-id, quality, tokens, fingerprints
-  operators/multimodal  binary-column decode plumbing (stubbed codecs)
+  operators/vision      V1–V7 cross-media fusion
+  operators/bgp, merge, salience, walks   KG query, upsert, salience,
+                        hash random walks over the built graph
+  functions/            corpus dedup, similarity/ANN, text analysis, …
+  streaming/            Structured-Streaming lifts of the batch stages
   plans/pipeline        stage orchestration, checkpoints, resume
   sources/              readers/sinks (pages, KB, ColdStart .cs, AIF ttl)
 """

@@ -49,8 +49,10 @@ from pyspark.sql import functions as F
 # surfaces.  "3": TAG_FLAT_SCHEMA gained `lang` and triples switched to
 # lang-carried-through-tagger semantics (min over producing copies) —
 # resuming over a v2 output dir must rebuild `tagged`, not crash on the
-# missing column or serve old-semantics triples.
-CODE_VERSION = "3"
+# missing column or serve old-semantics triples.  "4": TAG_FLAT_SCHEMA
+# (the `tagged` table) lost the five trigger/gap-only columns
+# fine_event, left_types, right_types, phrase, begins_with_comma.
+CODE_VERSION = "4"
 
 
 #: Spark catalog name configured by session.get_spark when an Iceberg

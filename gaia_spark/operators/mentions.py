@@ -1,30 +1,24 @@
-"""T2/T3/T7 — mention + trigger tagging via ``mapInPandas``.
+"""T2/T3/T5/T7 + per-doc T6/T8/T9 — the one per-document tagger.
 
-One Arrow-batched pass per document computes everything the downstream
-*relational* stages need, so the heavy `text` column is scanned exactly
-once (SURVEY.md §2.2 T2: "iterator-of-batches … deterministic,
-vectorized gazetteer+rule tagger"):
-
-- ``mentions``  — typed mention spans (the ELMo-LSTM-CRF analog, T2/T3)
-- ``triggers``  — event trigger spans (the Bi-LSTM-CRF analog, T7)
-- ``gaps``      — the connector phrase between each *adjacent* mention
-                  pair in a sentence, pre-normalized
-
-Emitting gaps here is the Spark-first trick: T6 relation extraction
-becomes a pure equi-self-join of mentions on (url, sent_id, pos) plus a
-broadcast join against the pattern table — no sentence text ever flows
-through a shuffle (SURVEY.md §2.4 "self-join (blocked theta)").
+``tag_flat`` is a single Arrow-batched ``mapInPandas`` pass per document
+(SURVEY.md §2.2 T2: "iterator-of-batches … deterministic, vectorized
+gazetteer+rule tagger").  It reads the heavy text column exactly once
+and runs tagging, nominal coreference (the oracle's
+``resolve_nominals``) and relation/event extraction (the oracle's
+``extract_doc_assertions``) over it, so every per-document stage is
+oracle-exact by construction.  The cross-document stages (T4 linking,
+T4b NIL, T11 canonicalization) stay relational and consume its rows.
 """
 
 from __future__ import annotations
 
 from collections.abc import Iterator
+from itertools import groupby
 
 import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.types import (
-    ArrayType,
     BooleanType,
     DoubleType,
     IntegerType,
@@ -33,190 +27,22 @@ from pyspark.sql.types import (
     StructType,
 )
 
-from gaia_ref.extract import split_sentences, tokenize
-from gaia_ref.tagging import connector_phrase, inter_tokens, tag_document
+from gaia_ref.tagging import tag_document
 
-_MENTION = StructType([
-    StructField("sent_id", IntegerType(), False),
-    StructField("pos", IntegerType(), False),
-    StructField("begin", IntegerType(), False),
-    StructField("end", IntegerType(), False),
-    StructField("surface", StringType(), False),
-    StructField("coarse", StringType(), False),
-    StructField("fine", StringType(), False),
-    StructField("nominal", BooleanType(), False),
-])
-_TRIGGER = StructType([
-    StructField("sent_id", IntegerType(), False),
-    StructField("begin", IntegerType(), False),
-    StructField("end", IntegerType(), False),
-    StructField("fine_event", StringType(), False),
-    StructField("left_types", ArrayType(StringType()), False),
-    StructField("right_types", ArrayType(StringType()), False),
-    StructField("conf", DoubleType(), False),
-])
-_GAP = StructType([
-    StructField("sent_id", IntegerType(), False),
-    StructField("pos", IntegerType(), False),
-    StructField("phrase", StringType(), True),
-    StructField("begins_with_comma", BooleanType(), False),
-])
-
-TAGGED_SCHEMA = StructType([
-    StructField("url", StringType(), False),
-    StructField("mentions", ArrayType(_MENTION), False),
-    StructField("triggers", ArrayType(_TRIGGER), False),
-    StructField("gaps", ArrayType(_GAP), False),
-])
-
-
-def _tag_one(url: str, text: str, pre: tuple | None = None) -> dict:
-    text = text or ""
-    ms, trs = pre if pre is not None else tag_document(text)
-    sent_spans = {sid: (sb, se) for sid, sb, se in split_sentences(text)}
-    by_sent: dict[int, list] = {}
-    for m in ms:
-        by_sent.setdefault(m.sent_id, []).append(m)
-    mention_rows, gap_rows = [], []
-    for sid in sorted(by_sent):
-        sml = sorted(by_sent[sid], key=lambda m: m.begin)
-        sb, se = sent_spans[sid]
-        # tokenize the sentence once for all its adjacent-mention gaps
-        stoks = tokenize(text[sb:se], base=sb) if len(sml) > 1 else None
-        for pos, m in enumerate(sml):
-            mention_rows.append(
-                (m.sent_id, pos, m.begin, m.end, m.surface, m.coarse,
-                 m.fine, m.nominal))
-            if pos + 1 < len(sml):
-                cp = connector_phrase(
-                    inter_tokens(text, sb, se, m.end, sml[pos + 1].begin,
-                                 stoks))
-                if cp is not None:
-                    gap_rows.append((sid, pos, cp[0], cp[1]))
-    trig_rows = [
-        (t.sent_id, t.begin, t.end, t.fine_event,
-         sorted(t.left_types), sorted(t.right_types), t.conf)
-        for t in trs
-    ]
-    return {"url": url, "mentions": mention_rows,
-            "triggers": trig_rows, "gaps": gap_rows}
-
-
-def _tag_batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-    for pdf in it:
-        yield pd.DataFrame(
-            [_tag_one(u, t) for u, t in zip(pdf["url"], pdf["text"])],
-            columns=["url", "mentions", "triggers", "gaps"],
-        )
-
-
-def tag_pages(pages_text: DataFrame) -> DataFrame:
-    """(url, text, …) → one row per url with mention/trigger/gap arrays."""
-    return pages_text.select("url", "text").mapInPandas(
-        _tag_batches, schema=TAGGED_SCHEMA
-    )
-
-
-# ---------------------------------------------------------------------------
-# fused fast path: T1 (extract) + T2/T3/T7 (tag) + T5 (nominal coref)
-# in ONE Arrow pass — per-document stages have no cross-doc dependency,
-# so fusing them removes two Python↔JVM round-trips and the
-# 1-group-per-doc applyInPandas shuffle; the cross-doc stages (T4
-# linking, T4b NIL, T6/T8 joins, T11 canonicalization) stay relational.
-# ---------------------------------------------------------------------------
-
-_RMENTION = StructType([
-    StructField("sent_id", IntegerType(), False),
-    StructField("pos", IntegerType(), False),
-    StructField("begin", IntegerType(), False),
-    StructField("end", IntegerType(), False),
-    StructField("surface", StringType(), False),
-    StructField("coarse", StringType(), False),
-    StructField("fine", StringType(), False),
-    StructField("nominal", BooleanType(), False),
-    StructField("link_norm", StringType(), False),
-])
-
-TAGGED_RESOLVED_SCHEMA = StructType([
-    StructField("url", StringType(), False),
-    StructField("mentions", ArrayType(_RMENTION), False),
-    StructField("triggers", ArrayType(_TRIGGER), False),
-    StructField("gaps", ArrayType(_GAP), False),
-])
-
-
-def _tag_resolve_one(url: str, text: str, pre: tuple | None = None) -> dict:
-    """Per-doc kernel: tag, then resolve nominals exactly like
-    gaia_ref.oracle.resolve_nominals / operators.coref._resolve_group
-    (nearest preceding named antecedent of same coarse type; unresolved
-    nominals dropped; resolved ones take antecedent fine + link_norm).
-
-    NOTE: `pos` is assigned BEFORE the nominal drop (tag-time
-    adjacency), matching the unfused tag_pages→resolve_nominals path.
-    """
-    from gaia_ref.extract import norm_surface
-
-    base = _tag_one(url, text, pre)
-    last_named: dict[str, tuple[str, str]] = {}
-    resolved = []
-    # mention rows arrive sorted by (sent_id, begin) from _tag_one
-    for (sid, pos, b, e, surf, coarse, fine, nominal) in base["mentions"]:
-        if not nominal:
-            last_named[coarse] = (surf, fine)
-            resolved.append((sid, pos, b, e, surf, coarse, fine, False,
-                             norm_surface(surf)))
-        else:
-            ante = last_named.get(coarse)
-            if ante is not None:
-                resolved.append((sid, pos, b, e, surf, coarse, ante[1],
-                                 True, norm_surface(ante[0])))
-    base["mentions"] = resolved
-    return base
-
-
-def _tag_resolve_batches(
-    it: Iterator[pd.DataFrame],
-) -> Iterator[pd.DataFrame]:
-    from gaia_ref.extract import extract_text
-
-    for pdf in it:
-        yield pd.DataFrame(
-            [
-                _tag_resolve_one(u, extract_text(h))
-                for u, h in zip(pdf["url"], pdf["html"])
-            ],
-            columns=["url", "mentions", "triggers", "gaps"],
-        )
-
-
-def tag_resolve_pages(pages: DataFrame) -> DataFrame:
-    """(url, html, …) → resolved-tagged rows; the fused T1+T2+T5 stage.
-
-    `mentions_df` over the result is the `resolved` table (with
-    link_norm); no further Python stage runs before the joins.
-    """
-    return pages.select("url", "html").mapInPandas(
-        _tag_resolve_batches, schema=TAGGED_RESOLVED_SCHEMA
-    )
-
-
-# flat variant: one row per mention/trigger/gap/assertion with a `kind`
-# discriminator.  Nested ARRAY<STRUCT> columns are 5-10× more expensive
-# to build on the pandas→Arrow boundary than flat nullable columns, and
-# the first thing every consumer does is explode them anyway — so the
-# hot path emits pre-exploded rows and consumers just filter on `kind`.
+# One row per mention/surface/assertion with a `kind` discriminator.
+# Nested ARRAY<STRUCT> columns are 5-10× more expensive to build on the
+# pandas→Arrow boundary than flat nullable columns, and the first thing
+# every consumer does is explode them anyway — so the kernel emits
+# pre-exploded rows and consumers just filter on `kind`.
 #
-# Assertions ('a' rows) are T6/T8/T9 computed per-document inside the
-# same pass (the body is gaia_ref.oracle.extract_doc_assertions —
-# oracle-exact by construction): relation/event extraction needs only
-# the doc's own resolved mentions plus a static pattern table, so
-# running it where the document already lives avoids re-shuffling every
-# mention row through the (url, sent_id) joins.  The relational
-# formulations (operators/relations.py, operators/events.py) remain the
-# checkpointed run_pipeline path and the per-operator test surface.
+# Assertions ('a' rows) are T6/T8/T9 computed per document inside the
+# same pass: relation/event extraction needs only the doc's own
+# resolved mentions plus a static pattern table, so running it where
+# the document already lives avoids re-shuffling every mention row
+# through (url, sent_id) joins.
 TAG_FLAT_SCHEMA = StructType([
     StructField("url", StringType(), False),
-    StructField("kind", StringType(), False),   # 'm' | 't' | 'g' | 'a'
+    StructField("kind", StringType(), False),   # 'm' | 's' | 'a'
     StructField("sent_id", IntegerType(), False),
     StructField("pos", IntegerType(), True),
     StructField("begin", IntegerType(), True),
@@ -226,12 +52,7 @@ TAG_FLAT_SCHEMA = StructType([
     StructField("fine", StringType(), True),
     StructField("nominal", BooleanType(), True),
     StructField("link_norm", StringType(), True),
-    StructField("fine_event", StringType(), True),
-    StructField("left_types", ArrayType(StringType()), True),
-    StructField("right_types", ArrayType(StringType()), True),
     StructField("conf", DoubleType(), True),
-    StructField("phrase", StringType(), True),
-    StructField("begins_with_comma", BooleanType(), True),
     StructField("pred", StringType(), True),
     StructField("obj_norm", StringType(), True),
     StructField("obj_coarse", StringType(), True),
@@ -244,49 +65,43 @@ TAG_FLAT_SCHEMA = StructType([
     StructField("lang", StringType(), True),
 ])
 
+#: the row families ``tag_flat`` can emit
+KINDS = "msa"
+
 _FLAT_COLS = [f.name for f in TAG_FLAT_SCHEMA.fields]
 _FLAT_COLS_NOLANG = _FLAT_COLS[:-1]
-_PAD = (None, None, None, None)  # pred..obj_fine for non-assertion rows
+_PAD = (None, None, None, None, None)  # conf..obj_fine for non-'a' rows
 
 
-def _flat_rows(url: str, text: str, kinds: str = "mtga") -> list[tuple]:
-    """One tag_document call serves every requested row family."""
+def _flat_rows(url: str, text: str, kinds: str) -> list[tuple]:
+    """One tag_document + resolve_nominals call serves every family."""
     from gaia_ref.extract import norm_surface
     from gaia_ref.oracle import extract_doc_assertions, resolve_nominals
 
     pre = tag_document(text or "")
+    resolved = resolve_nominals(pre[0])
     rows = []
-    if "m" in kinds or "t" in kinds or "g" in kinds:
-        d = _tag_resolve_one(url, text, pre)
-        if "m" in kinds:
-            for (sid, pos, b, e, surf, coarse, fine, nominal,
-                 ln) in d["mentions"]:
-                rows.append((url, "m", sid, pos, b, e, surf, coarse,
-                             fine, nominal, ln, None, None, None, None,
-                             None, None) + _PAD)
-        if "t" in kinds:
-            for (sid, b, e, fev, lt, rt, conf) in d["triggers"]:
-                rows.append((url, "t", sid, None, b, e, None, None,
-                             None, None, None, fev, lt, rt, conf, None,
-                             None) + _PAD)
-        if "g" in kinds:
-            for (sid, pos, phrase, bwc) in d["gaps"]:
-                rows.append((url, "g", sid, pos, None, None, None,
-                             None, None, None, None, None, None, None,
-                             None, phrase, bwc) + _PAD)
-    resolved = None
+    if "m" in kinds:
+        # `pos`: the mention's rank by begin among ALL its sentence's
+        # mentions, i.e. before unresolved nominals are dropped
+        ordered = sorted(pre[0], key=lambda m: (m.sent_id, m.begin))
+        pos = {id(m): i
+               for _, sent in groupby(ordered, key=lambda m: m.sent_id)
+               for i, m in enumerate(sent)}
+        for m, a in resolved:
+            rows.append((url, "m", m.sent_id, pos[id(m)], m.begin, m.end,
+                         m.surface, m.coarse, a.fine, m.nominal,
+                         norm_surface(a.surface)) + _PAD)
     if "s" in kinds:
         # per-doc-distinct resolved surface pairs, skinny: the ONLY
         # mention-derived input the fast path needs (linking/NIL/
         # canonicalization run over the surface vocabulary)
-        resolved = resolve_nominals(pre[0])
         surfs = sorted({
             (m.coarse, norm_surface(a.surface)) for m, a in resolved
         })
         for coarse, ln in surfs:
             rows.append((url, "s", 0, None, None, None, None, coarse,
-                         None, None, ln, None, None, None, None, None,
-                         None) + _PAD)
+                         None, None, ln) + _PAD)
     if "a" in kinds:
         rels, evts = extract_doc_assertions(
             text, pretagged=pre, preresolved=resolved)
@@ -294,9 +109,8 @@ def _flat_rows(url: str, text: str, kinds: str = "mtga") -> list[tuple]:
             a, b = r["subj_m"], r["obj_m"]
             rows.append((url, "a", r["sent_id"], None, None, None, None,
                          a.coarse, a.fine, None, norm_surface(a.surface),
-                         None, None, None, r["conf"], None, None,
-                         r["pred"], norm_surface(b.surface), b.coarse,
-                         b.fine))
+                         r["conf"], r["pred"], norm_surface(b.surface),
+                         b.coarse, b.fine))
     return rows
 
 
@@ -329,18 +143,24 @@ def _tag_flat_batches(kinds: str, from_text: bool, with_lang: bool):
     return run
 
 
-def tag_flat(pages: DataFrame, kinds: str = "mtga",
+def tag_flat(pages: DataFrame, kinds: str,
              from_text: bool = False) -> DataFrame:
-    """Fused T1+T2+T5(+T6/T8 'a') emitting pre-exploded rows.
+    """Fused T1+T2+T5+T6/T8 emitting pre-exploded rows.
 
-    ``kinds`` selects emitted row families ('m'entions, 't'riggers,
-    'g'aps, 's'urfaces, 'a'ssertions) — the pipeline fast path emits
+    ``kinds`` selects the emitted row families, any of 'm'entions
+    (the resolved-mentions table), 's'urfaces (per-doc-distinct
+    linking keys) and 'a'ssertions.  The pipeline fast path emits
     only "sa", cutting the Arrow/shuffle row volume ~60%.
 
     ``from_text=True`` consumes an already-extracted ``text`` column
     (e.g. the checkpointed pages_text table) instead of re-extracting
     from ``html``.
     """
+    bad = "".join(sorted(set(kinds) - set(KINDS)))
+    if bad or not kinds:
+        raise ValueError(
+            f"tag_flat: kinds={kinds!r} has unknown row kinds {bad!r}; "
+            f"pass a non-empty subset of {KINDS!r}")
     src = "text" if from_text else "html"
     with_lang = "lang" in pages.columns
     cols = ["url", src] + (["lang"] if with_lang else [])
@@ -354,17 +174,6 @@ def flat_mentions(flat: DataFrame) -> DataFrame:
     return flat.filter(F.col("kind") == "m").select(
         "url", "sent_id", "pos", "begin", "end", "surface", "coarse",
         "fine", "nominal", "link_norm")
-
-
-def flat_triggers(flat: DataFrame) -> DataFrame:
-    return flat.filter(F.col("kind") == "t").select(
-        "url", "sent_id", "begin", "end", "fine_event",
-        "left_types", "right_types", "conf")
-
-
-def flat_gaps(flat: DataFrame) -> DataFrame:
-    return flat.filter(F.col("kind") == "g").select(
-        "url", "sent_id", "pos", "phrase", "begins_with_comma")
 
 
 def flat_surfaces(flat: DataFrame) -> DataFrame:
@@ -386,21 +195,3 @@ def flat_assertions(flat: DataFrame, with_lang: bool = False) -> DataFrame:
         "pred", "obj_norm", "obj_coarse", "obj_fine", "conf",
         *(["lang"] if with_lang else []))
 
-
-def mentions_df(tagged: DataFrame) -> DataFrame:
-    """Explode to flat mention rows (url, sent_id, pos, begin, end, …)."""
-    return tagged.select(
-        "url", F.explode("mentions").alias("m")
-    ).select("url", "m.*")
-
-
-def triggers_df(tagged: DataFrame) -> DataFrame:
-    return tagged.select(
-        "url", F.explode("triggers").alias("t")
-    ).select("url", "t.*")
-
-
-def gaps_df(tagged: DataFrame) -> DataFrame:
-    return tagged.select(
-        "url", F.explode("gaps").alias("g")
-    ).select("url", "g.*")

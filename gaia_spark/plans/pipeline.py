@@ -21,10 +21,8 @@ Stage boundaries (each = one checkpoint table, per-partition lineage):
 Within a stage Catalyst pipelines the narrow ops; across stages the
 materialization is deliberate — resumability over pipelining
 (SURVEY.md §4.1 "stage = full materialization" row).  The same fused
-kernel backs build_triples_df (the single-job throughput path, no
-checkpoints); the per-stage relational formulations of T5/T6/T8
-(operators/coref.py, relations.py, events.py) remain the documented
-decomposition and per-operator test surface.
+kernel, the only tagger, backs build_triples_df (the single-job
+throughput path, no checkpoints).
 """
 
 from __future__ import annotations
@@ -196,7 +194,8 @@ def build_triples_df(
       the pandas-UDF extractor (a single parquet file would otherwise
       pin T1/T2 to ONE task — files.maxPartitionBytes only splits big
       files, not small ones);
-    - fan-in stages (tagged feeds T5/T6/T7; resolved feeds T4/T6/T8)
+    - fan-in stages (the tagged rows feed linking and the assertion
+      slice; the linked/NIL/canonical-map tables feed several joins)
       are localCheckpoint-ed (materialize + TRUNCATE LINEAGE) so the
       expensive Python tagging runs once, not once per consumer — and,
       just as important, so the serialized physical plan every later

@@ -92,22 +92,25 @@ def streaming_exact_dedup(
     ) -> Iterator[pd.DataFrame]:
         if state.exists:
             return
+        # the same doc may arrive twice in one micro-batch with different
+        # tags: take the min non-null tag among the min-doc_id rows, so
+        # the output never depends on row order (null if all are null)
         best = None
-        best_tag = None
+        tags: list = []
         for pdf in pdfs:
-            if len(pdf):
-                i = int(pdf["doc_id"].idxmin())
-                m = int(pdf["doc_id"].loc[i])
-                if best is None or m < best:
-                    best = m
-                    if "tag" in pdf.columns:
-                        best_tag = int(pdf["tag"].loc[i])
+            if not len(pdf):
+                continue
+            m = int(pdf["doc_id"].min())
+            if best is None or m < best:
+                best, tags = m, []
+            if m == best and tag_col is not None:
+                tags.extend(pdf.loc[pdf["doc_id"] == m, "tag"].dropna())
         if best is None:
             return
         state.update((True,))
         row = {"fingerprint": [key[0]], "doc_id": [best]}
         if tag_col is not None:
-            row[tag_col] = [best_tag]
+            row[tag_col] = [int(min(tags)) if tags else None]
         yield pd.DataFrame(row)
 
     return fp.groupBy("fingerprint").applyInPandasWithState(

@@ -75,3 +75,24 @@ def test_recrawled_duplicate_urls_do_not_multiply_triples(
     assert got.count() == base.count()
     assert got.groupBy("url", "sent_id", "subj", "pred", "obj").count() \
               .filter("count > 1").count() == 0
+
+
+def test_mention_slice_equals_oracle(spark, corpus_dir, oracle_result):
+    """The 'm' row family is the resolved-mentions table graph_nodes
+    consumes: it must equal the oracle's mention rows, nominals
+    resolved (antecedent fine type and link key) or dropped."""
+    from gaia_ref.extract import norm_surface
+    from gaia_spark.operators.mentions import flat_mentions, tag_flat
+
+    key = ["url", "sent_id", "begin", "end", "surface", "coarse", "fine",
+           "nominal", "link_norm"]
+    pages = spark.read.parquet(os.path.join(corpus_dir, "pages.parquet"))
+    got = sorted(tuple(r) for r in flat_mentions(
+        tag_flat(pages, kinds="m")).select(*key).collect())
+    want = sorted(
+        (m["url"], m["sent_id"], m["begin"], m["end"], m["surface"],
+         m["coarse"], m["fine"], m["nominal"],
+         norm_surface(m["ante_surface"]))
+        for m in oracle_result["mentions"])
+    assert got == want
+    assert any(nominal for *_, nominal, _ln in got)

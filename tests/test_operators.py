@@ -1,9 +1,9 @@
 """Per-operator unit tests on micro-fixtures (SURVEY.md §5.2.2)."""
 
+import pytest
 from pyspark.sql import functions as F
 
 from gaia_ref.gazetteer import alias_rows, kb_rows
-from gaia_spark.operators.coref import resolve_nominals
 from gaia_spark.operators.extract import extract_pages
 from gaia_spark.operators.graph import connected_components
 from gaia_spark.operators.linking import (
@@ -13,10 +13,9 @@ from gaia_spark.operators.linking import (
     nil_clusters,
 )
 from gaia_spark.operators.mentions import (
-    gaps_df,
-    mentions_df,
-    tag_pages,
-    triggers_df,
+    flat_mentions,
+    flat_surfaces,
+    tag_flat,
 )
 
 
@@ -24,6 +23,14 @@ def _pages_df(spark, rows):
     return spark.createDataFrame(
         rows, schema="url string, warc_ts timestamp, html binary, "
                      "text string, lang string")
+
+
+def _mentions(df):
+    return flat_mentions(tag_flat(df, kinds="m", from_text=True))
+
+
+def _surfaces(df):
+    return flat_surfaces(tag_flat(df, kinds="s", from_text=True)).distinct()
 
 
 def _kb(spark):
@@ -48,21 +55,10 @@ def test_tagger_outputs(spark):
     df = _pages_df(spark, [
         ("u1", None, None,
          "Viktor Orlov , head of Helios Energy , visited Warsaw .", "en")])
-    tagged = tag_pages(df.select("url", "text"))
-    ms = mentions_df(tagged).orderBy("pos").collect()
+    ms = _mentions(df).orderBy("pos").collect()
     assert [(m.surface, m.coarse, m.pos) for m in ms] == [
         ("Viktor Orlov", "PER", 0), ("Helios Energy", "ORG", 1),
         ("Warsaw", "GPE", 2)]
-    gaps = gaps_df(tagged).orderBy("pos").collect()
-    assert [(g.phrase, g.begins_with_comma) for g in gaps] == [
-        ("head of", True), ("visited", True)]
-
-
-def test_trigger_df(spark):
-    df = _pages_df(spark, [("u1", None, None,
-                            "Kyiv arrested Orlov at dawn .", "en")])
-    ts = triggers_df(tag_pages(df.select("url", "text"))).collect()
-    assert len(ts) == 1 and ts[0].fine_event == "Justice.Arrest"
 
 
 def test_coref_resolves_and_drops(spark):
@@ -71,14 +67,24 @@ def test_coref_resolves_and_drops(spark):
          "Helios Energy is based in Berlin .\n"
          "The company opened an office in Madrid .\n"
          "The president visited Kyiv .", "en")])
-    res = resolve_nominals(
-        mentions_df(tag_pages(df.select("url", "text"))))
-    rows = {(r.surface, r.fine, r.link_norm, r.nominal)
-            for r in res.collect()}
+    ms = _mentions(df).collect()
+    rows = {(r.surface, r.fine, r.link_norm, r.nominal) for r in ms}
     # nominal 'The company' inherits Helios Energy's identity
     assert ("The company", "ORG.Company", "helios energy", True) in rows
-    # 'The president' has no PER antecedent → dropped
+    # 'The president' has no PER antecedent → dropped; `pos` is taken
+    # before the drop, so Kyiv keeps its tag-time position 1
     assert not any(s == "The president" for s, *_ in rows)
+    assert [r.pos for r in ms if r.surface == "Kyiv"] == [1]
+
+
+def test_tag_flat_rejects_unknown_kinds(spark):
+    df = _pages_df(spark, [("u1", None, None, "Orlov visited Kyiv .", "en")])
+    # 't'/'g' were trigger/gap families: a stale caller must fail loudly
+    # rather than silently get no rows of those kinds
+    with pytest.raises(ValueError, match="'gt'"):
+        tag_flat(df, kinds="mtga", from_text=True)
+    with pytest.raises(ValueError):
+        tag_flat(df, kinds="", from_text=True)
 
 
 def test_alias_dictionary_disambiguation(spark):
@@ -95,12 +101,11 @@ def test_link_mentions_broadcast_plan(spark):
     kb_e, kb_a = _kb(spark)
     df = _pages_df(spark, [("u1", None, None,
                             "Orlov visited Kyiv .", "en")])
-    res = resolve_nominals(mentions_df(tag_pages(df.select("url", "text"))))
-    linked = link_mentions(res, kb_e, kb_a)
+    linked = link_mentions(_surfaces(df), kb_e, kb_a)
     plan = linked._jdf.queryExecution().executedPlan().toString()
     assert "BroadcastHashJoin" in plan
-    got = {(r.surface, r.entity_id) for r in linked.collect()}
-    assert got == {("Orlov", "Q1001"), ("Kyiv", "Q3001")}
+    got = {(r.link_norm, r.entity_id) for r in linked.collect()}
+    assert got == {("orlov", "Q1001"), ("kyiv", "Q3001")}
 
 
 def test_nil_clustering_spark_matches_oracle(spark):
@@ -111,9 +116,8 @@ def test_nil_clustering_spark_matches_oracle(spark):
         ("u3", None, None, "Kestrel Logistics is based in Lviv .", "en"),
         ("u4", None, None, "Petrova works for Kestrel .", "en"),
     ])
-    res = resolve_nominals(mentions_df(tag_pages(df.select("url", "text"))))
     kb_e, kb_a = _kb(spark)
-    linked = link_mentions(res, kb_e, kb_a)
+    linked = link_mentions(_surfaces(df), kb_e, kb_a)
     nil = nil_clusters(linked)
     got = {(r.coarse, r.link_norm): r.nil_id for r in nil.collect()}
     want = nil_cluster_ids(set(got.keys()))

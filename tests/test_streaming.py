@@ -275,3 +275,28 @@ def test_streaming_exact_dedup_tag_passthrough(spark, tmp_path):
     # "same text" keeper = 50 from batch 0 (1@batch1 suppressed
     # despite being smaller); uniques keep their own batch tag
     assert rows == {(50, 0), (60, 0), (70, 1)}
+
+
+def test_streaming_exact_dedup_tag_ties_are_deterministic(spark, tmp_path):
+    """One doc delivered twice in one micro-batch with different tags
+    (and a null one) emits the MIN non-null tag of its min-doc_id rows;
+    a keeper whose tags are all null emits a null tag."""
+    from gaia_spark.streaming import streaming_exact_dedup
+
+    src = str(tmp_path / "docs_tie_in")
+    schema = "doc_id long, text string, part long"
+    spark.createDataFrame(
+        [(5, "dup text", 3), (5, "Dup  Text", None), (5, "dup text", 2),
+         (9, "dup text", 1), (7, "only null", None)],
+        schema).coalesce(1).write.parquet(src)
+
+    stream = spark.readStream.schema(schema).parquet(src)
+    q = (streaming_exact_dedup(stream, tag_col="part").writeStream
+         .format("memory").queryName("dedup_tie_out")
+         .option("checkpointLocation", str(tmp_path / "ckpt_tie"))
+         .trigger(availableNow=True).start())
+    q.awaitTermination(300)
+
+    rows = {(r.doc_id, r.part) for r in spark.sql(
+        "SELECT doc_id, part FROM dedup_tie_out").collect()}
+    assert rows == {(5, 2), (7, None)}

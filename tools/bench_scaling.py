@@ -73,7 +73,7 @@ pages = spark.read.parquet(f"{{cdir}}/pages.parquet")
 kb_e = spark.read.parquet(f"{{cdir}}/kb_entities.parquet")
 kb_a = spark.read.parquet(f"{{cdir}}/kb_aliases.parquet")
 # warmup: JVM + python workers + lexicon import
-tag_flat(pages.limit(256).repartition(2 * cpus)).count()
+tag_flat(pages.limit(256).repartition(2 * cpus), kinds="sa").count()
 c0 = cpu_ticks()
 p0 = proc_cpu()
 t0 = time.perf_counter()

@@ -56,7 +56,8 @@ def main() -> None:
         extra_conf=extra)
     spark.sparkContext.setLogLevel("ERROR")
     pages = spark.read.parquet(f"{cdir}/pages.parquet")
-    tag_flat(pages.limit(256).repartition(2 * cpus)).count()  # warmup
+    tag_flat(pages.limit(256).repartition(2 * cpus),  # warmup
+             kinds="sa").count()
 
     nparts = 2 * spark.sparkContext.defaultParallelism
     c0 = proc_cpu()

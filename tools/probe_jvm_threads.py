@@ -111,7 +111,8 @@ def main() -> None:
     pages = spark.read.parquet(f"{cdir}/pages.parquet")
     kb_e = spark.read.parquet(f"{cdir}/kb_entities.parquet")
     kb_a = spark.read.parquet(f"{cdir}/kb_aliases.parquet")
-    tag_flat(pages.limit(256).repartition(2 * cpus)).count()  # warmup
+    tag_flat(pages.limit(256).repartition(2 * cpus),  # warmup
+             kinds="sa").count()
 
     sampler = Sampler()
     baseline_wait = 4.0

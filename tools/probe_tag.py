@@ -45,7 +45,8 @@ def main() -> None:
     spark = get_spark("tagprobe", cpus=cpus, shuffle_partitions=2 * cpus)
     spark.sparkContext.setLogLevel("ERROR")
     pages = spark.read.parquet(f"{cdir}/pages.parquet")
-    tag_flat(pages.limit(256).repartition(2 * cpus)).count()  # warmup
+    tag_flat(pages.limit(256).repartition(2 * cpus),  # warmup
+             kinds="sa").count()
 
     nparts = 2 * spark.sparkContext.defaultParallelism
     out: dict[str, dict] = {}
